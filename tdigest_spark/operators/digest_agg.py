@@ -110,6 +110,58 @@ def _merge_rows(rows: Sequence, compress: bool = True) -> dict:
     return d.to_row()
 
 
+def _partial_digests(
+    df: DataFrame,
+    value_col: str,
+    by: Sequence[str],
+    delta: int,
+    weight_col: str | None = None,
+    digest_col: str = "digest",
+) -> DataFrame:
+    """Stage 1 of :func:`tdigest_agg`: one digest per (input partition
+    x group), shipped at the working delta, no shuffle. Also the batch
+    side of ``digest_sink``'s upsert, which merges these partials
+    itself."""
+    by = list(by)
+    cols = [F.col(c) for c in by] + [F.col(value_col).cast("double").alias(_VALUE)]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double").alias(_WEIGHT))
+    src = df.select(*cols)
+
+    out_schema = T.StructType(
+        [src.schema[c] for c in by] + [T.StructField(digest_col, DIGEST_TYPE, True)]
+    )
+
+    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        accs: dict[tuple, TDigest] = {}
+        for pdf in batches:
+            if by:
+                for key, g in pdf.groupby(by, sort=False, dropna=False):
+                    key = canon_key(key if isinstance(key, tuple) else (key,))
+                    w = g[_WEIGHT].to_numpy() if weight_col else None
+                    d = TDigest.from_values(g[_VALUE].to_numpy(), delta, weights=w)
+                    accs[key] = accs[key].merge(d) if key in accs else d
+            else:
+                w = pdf[_WEIGHT].to_numpy() if weight_col else None
+                d = TDigest.from_values(pdf[_VALUE].to_numpy(), delta, weights=w)
+                accs[()] = accs[()].merge(d) if () in accs else d
+        if not accs:
+            return
+        data: dict[str, list] = {c: [] for c in by}
+        data[digest_col] = []
+        for key, d in accs.items():
+            for c, k in zip(by, key):
+                data[c].append(k)
+            # one compress to the WORKING delta before the shuffle:
+            # ~LAZY_REL/WORK_MULT-fold smaller wire size AND better
+            # final accuracy than shipping the lazy concat (mid-chain
+            # compress passes dominate deep-chain rank error)
+            data[digest_col].append(d.ship_compressed().to_row())
+        yield pd.DataFrame(data)
+
+    return src.mapInPandas(build_partials, out_schema)
+
+
 def tdigest_agg(
     df: DataFrame,
     value_col: str,
@@ -153,43 +205,8 @@ def tdigest_agg(
             digest_col=digest_col,
         )
     by = list(by)
-    cols = [F.col(c) for c in by] + [F.col(value_col).cast("double").alias(_VALUE)]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias(_WEIGHT))
-    src = df.select(*cols)
-
-    out_schema = T.StructType(
-        [src.schema[c] for c in by] + [T.StructField(digest_col, DIGEST_TYPE, True)]
-    )
-
-    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[tuple, TDigest] = {}
-        for pdf in batches:
-            if by:
-                for key, g in pdf.groupby(by, sort=False, dropna=False):
-                    key = canon_key(key if isinstance(key, tuple) else (key,))
-                    w = g[_WEIGHT].to_numpy() if weight_col else None
-                    d = TDigest.from_values(g[_VALUE].to_numpy(), delta, weights=w)
-                    accs[key] = accs[key].merge(d) if key in accs else d
-            else:
-                w = pdf[_WEIGHT].to_numpy() if weight_col else None
-                d = TDigest.from_values(pdf[_VALUE].to_numpy(), delta, weights=w)
-                accs[()] = accs[()].merge(d) if () in accs else d
-        if not accs:
-            return
-        data: dict[str, list] = {c: [] for c in by}
-        data[digest_col] = []
-        for key, d in accs.items():
-            for c, k in zip(by, key):
-                data[c].append(k)
-            # one compress to the WORKING delta before the shuffle:
-            # ~LAZY_REL/WORK_MULT-fold smaller wire size AND better
-            # final accuracy than shipping the lazy concat (mid-chain
-            # compress passes dominate deep-chain rank error)
-            data[digest_col].append(d.ship_compressed().to_row())
-        yield pd.DataFrame(data)
-
-    partials = src.mapInPandas(build_partials, out_schema)
+    partials = _partial_digests(df, value_col, by, delta, weight_col, digest_col)
+    out_schema = partials.schema
 
     def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
         out = {c: [pdf[c].iloc[0]] for c in by}

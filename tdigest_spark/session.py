@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """32g, or half the physical RAM when that is smaller: a local-mode
+    driver heap sized above the host lets the JVM grow until the
+    kernel OOM-kills it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(32 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "tdigest_spark",
     master: str | None = None,
@@ -36,7 +44,10 @@ def get_spark(
         # batches amortize the Python/Arrow boundary)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

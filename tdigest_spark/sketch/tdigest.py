@@ -38,7 +38,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-__all__ = ["TDigest", "ksize", "ksize_inv", "threshold"]
+__all__ = ["TDigest", "k1_cluster_merge", "ksize", "ksize_inv", "threshold"]
 
 _EMPTY = np.empty(0, dtype=np.float64)
 
@@ -734,3 +734,42 @@ class TDigest:
             vmax=float(get("vmax")),
             delta=int(get("delta")),
         )
+
+
+def k1_cluster_merge(digests: list[TDigest], delta: int) -> TDigest:
+    """Merge ``digests`` by the CLOSED-FORM k1 grouping — the numpy twin
+    of ``operators.digest_agg._k1_cluster_rebuild`` at a fixed delta,
+    i.e. the SQL merge ``tdigest_agg`` runs on its partials by default.
+
+    Centroids sorted by (mean, weight) get cluster id
+    ``floor(delta * (asin(2q - 1)/pi + 1/2))`` from their clamped
+    mid-rank q; each cluster becomes one centroid (weighted mean, summed
+    weight), sorted by (mean, weight) as ``sort_array`` does, and
+    ``total_weight`` is the left fold of the cluster weights. Empty
+    digests contribute nothing; all-empty input gives an empty digest.
+    Equal to the SQL result up to floating-point summation order
+    (``test_k1_cluster_merge_matches_sql`` pins the two together)."""
+    parts = [d for d in digests if not d.is_empty()]
+    if not parts:
+        return TDigest.empty(delta)
+    m = np.concatenate([d.means for d in parts])
+    w = np.concatenate([d.weights for d in parts])
+    order = np.lexsort((w, m))
+    m, w = m[order], w[order]
+    run = np.cumsum(w)
+    q = np.clip((run - w / 2.0) / run[-1], 1e-12, 1.0 - 1e-12)
+    k = np.floor(float(delta) * (np.arcsin(2.0 * q - 1.0) / math.pi + 0.5))
+    # k is non-decreasing along the sorted centroids: clusters are runs
+    starts = np.flatnonzero(np.concatenate(([True], k[1:] != k[:-1])))
+    cw = np.add.reduceat(w, starts)
+    cm = np.add.reduceat(m * w, starts) / cw
+    order = np.lexsort((cw, cm))
+    cm, cw = cm[order], cw[order]
+    return TDigest(
+        means=cm,
+        weights=cw,
+        total_weight=float(np.cumsum(cw)[-1]),
+        vmin=min(d.vmin for d in parts),
+        vmax=max(d.vmax for d in parts),
+        delta=delta,
+    )

@@ -21,7 +21,9 @@ Three shapes:
   partial digests into a checkpoint parquet table via the same
   associative merge as the batch path (streaming query == incremental
   batch job; exactly-once per micro-batch via atomic snapshot-pointer
-  commits that carry the last-merged batch id WITH the data).
+  commits that carry the last-merged batch id WITH the data). Each
+  batch is one upsert plan — one shuffle, one Python stage — whose
+  Python work is O(touched groups); the write is O(table).
 
 Late data: both shapes compose with ``withWatermark`` upstream —
 rows later than the watermark are dropped by Spark before they reach
@@ -294,12 +296,20 @@ def digest_sink(
     the grace generation; it is deleted one commit later, never under a
     live reader.
 
+    Per batch, one plan (:func:`_upsert`): the batch's partial digests
+    and the stored rows are exchanged once by key; untouched groups
+    pass through byte-identical without entering Python, and each
+    touched group is merged in one ``mapInPandas`` stage, giving the
+    digest ``tdigest_merge_agg(stored ∪ tdigest_agg(batch))`` would.
+    Python work is O(touched groups); the write is O(table). The first
+    batch is ``tdigest_agg`` of the batch alone.
+
     Scope: the pointer lives on the driver-local filesystem (or NFS
     shared with it), the deployment shape of a foreachBatch driver
     callback; for object-storage tables use the Iceberg path in
     ``sources.catalog``, whose commit protocol does this natively.
     Returns the StreamingQuery."""
-    from tdigest_spark.operators.digest_agg import tdigest_agg, tdigest_merge_agg
+    from tdigest_spark.operators.digest_agg import tdigest_agg
 
     by = list(by)
 
@@ -309,26 +319,12 @@ def digest_sink(
         if last is not None and batch_id <= last:
             drain_batch(batch_df)  # replayed batch: already merged
             return
-        new = tdigest_agg(batch_df, value_col, by=by, delta=delta)
-        if last is not None and by:
-            # incremental-view maintenance (same split as sketch_sink):
-            # only groups present in this micro-batch go through the
-            # merge stage; untouched groups' digests pass through
-            # byte-identical — which is also more faithful, since
-            # re-merging a lone digest at working delta could
-            # re-compress it for no reason.
-            new = new.localCheckpoint(eager=True)
-            old = spark.read.parquet(table_dir)
-            keys = new.select(*by).distinct()
-            touched, untouched = _split_touched(old, keys, by)
-            merged = tdigest_merge_agg(
-                touched.unionByName(new), by=by
-            ).unionByName(untouched)
-        elif last is not None:
-            old = spark.read.parquet(table_dir)
-            merged = tdigest_merge_agg(old.unionByName(new), by=by)
+        if last is None:
+            merged = tdigest_agg(batch_df, value_col, by=by, delta=delta)
         else:
-            merged = new
+            merged = _upsert(
+                spark.read.parquet(table_dir), batch_df, value_col, by, delta
+            )
         _commit_snapshot(merged, table_dir, batch_id)
 
     return (
@@ -337,6 +333,82 @@ def digest_sink(
         .trigger(availableNow=True)
         .start()
     )
+
+
+_IS_NEW = "__is_new"
+_TOUCHED = "__touched"
+
+
+def _upsert(
+    old: DataFrame, batch_df: DataFrame, value_col: str, by: list, delta: int
+) -> DataFrame:
+    """``old`` (a stored ``by..., digest`` table) with ``batch_df``
+    merged in, as ONE plan: the batch's partial digests (stage 1 of
+    ``tdigest_agg``) are unioned with the stored rows and exchanged
+    once by key; a window ``max(is_new)`` per key marks the groups the
+    batch touches. Untouched rows never enter Python and pass through
+    byte-identical. Touched rows go through one ``mapInPandas`` that,
+    per group, rebuilds the batch digest as ``tdigest_agg`` would,
+    merges it with the stored digest and compresses once: the chain
+    ``tdigest_merge_agg(touched ∪ tdigest_agg(batch))`` in one stage.
+    NULL keys group as one key (window partitioning is null-safe)."""
+    from pyspark.sql import Window
+
+    from tdigest_spark.operators.digest_agg import (
+        DIGEST_TYPE,
+        _merge_rows,
+        _partial_digests,
+        canon_key,
+    )
+    from tdigest_spark.sketch.tdigest import k1_cluster_merge
+
+    col = "digest"
+    new = _partial_digests(batch_df, value_col, by, delta, digest_col=col)
+    rows = (
+        old.select(*by, col)
+        .withColumn(_IS_NEW, F.lit(False))
+        .unionByName(new.withColumn(_IS_NEW, F.lit(True)))
+        .withColumn(_TOUCHED, F.max(_IS_NEW).over(Window.partitionBy(*by)))
+    )
+    out_schema = T.StructType(
+        [old.schema[c] for c in by] + [T.StructField(col, DIGEST_TYPE, True)]
+    )
+
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # key -> (stored rows, batch partial rows)
+        accs: dict[tuple, tuple[list, list]] = {}
+        for pdf in batches:
+            groups = pdf.groupby(by, sort=False, dropna=False) if by else [((), pdf)]
+            for key, g in groups:
+                key = canon_key(key if isinstance(key, tuple) else (key,))
+                stored, parts = accs.setdefault(key, ([], []))
+                for r, is_new in zip(g[col], g[_IS_NEW]):
+                    (parts if is_new else stored).append(r)
+        if not accs:
+            return
+        data: dict[str, list] = {c: [] for c in by}
+        data[col] = []
+        for key, (stored, parts) in accs.items():
+            # the batch digest as tdigest_agg stores it: the SQL k1
+            # merge when grouped, the greedy final reduce when keyless
+            # (via its row form, as stored: from_row resets the
+            # compression direction the final merge alternates from)
+            if by:
+                batch = k1_cluster_merge([TDigest.from_row(r) for r in parts], delta)
+            else:
+                batch = TDigest.from_row(_merge_rows(parts))
+            for c, k in zip(by, key):
+                data[c].append(k)
+            digests = [TDigest.from_row(r) for r in stored] + [batch]
+            data[col].append(TDigest.merge_all(digests).compressed().to_row())
+        yield pd.DataFrame(data)
+
+    touched = (
+        rows.where(F.col(_TOUCHED))
+        .select(*by, col, _IS_NEW)
+        .mapInPandas(merge, out_schema)
+    )
+    return rows.where(~F.col(_TOUCHED)).select(*by, col).unionByName(touched)
 
 
 def _split_touched(old: DataFrame, keys_df: DataFrame, by: Sequence[str]):

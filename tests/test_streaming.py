@@ -275,9 +275,9 @@ def test_sketch_sink_foreachbatch(spark, sf_dir, stream_dir, tmp_path):
 
 
 def test_digest_sink_untouched_groups_pass_through(spark, tmp_path):
-    """digest_sink's incremental-view split: a group absent from later
-    micro-batches is carried through the anti-join (never re-merged)
-    and the final stats equal the one-shot batch build exactly
+    """digest_sink's incremental-view maintenance: a group absent from
+    later micro-batches passes through untouched (never re-merged) and
+    the final stats equal the one-shot batch build exactly
     (lossless)."""
     import pandas as pd
 
@@ -315,6 +315,187 @@ def test_digest_sink_untouched_groups_pass_through(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def _digest_table(df, by) -> dict:
+    """A ``by..., digest`` frame as {key tuple: digest dict}."""
+    return {
+        tuple(r[c] for c in by): r["digest"].asDict() for r in df.collect()
+    }
+
+
+def _sink_per_batch(spark, tmp_path, batches, schema, by, delta) -> list:
+    """Run ``digest_sink`` once per batch (a batch = a list of pyarrow
+    tables, one parquet file each, so one micro-batch per run); return
+    the stored table after every commit."""
+    import pyarrow.parquet as pq
+
+    from tdigest_spark.streaming.digest_stream import digest_sink
+
+    src = tmp_path / "src"
+    src.mkdir()
+    table = str(tmp_path / "table")
+    out = []
+    for i, files in enumerate(batches):
+        for j, t in enumerate(files):
+            pq.write_table(t, str(src / f"b{i}-{j}.parquet"))
+        q = digest_sink(
+            spark.readStream.schema(schema).parquet(str(src)), "v", by, table,
+            str(tmp_path / "ck"), delta=delta,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        out.append(_digest_table(spark.read.parquet(table), by))
+    return out
+
+
+def _chain_step(spark, stored, batch_df, by, key_schema, delta) -> dict:
+    """One micro-batch through the chain the sink computes, from public
+    calls: ``tdigest_merge_agg`` over the touched stored digests and the
+    batch's ``tdigest_agg``; untouched digests carried over."""
+    from tdigest_spark.operators.digest_agg import DIGEST_TYPE, tdigest_merge_agg
+
+    new = _digest_table(tdigest_agg(batch_df, "v", by=by, delta=delta), by)
+    rows = [(*k, d) for k, d in stored.items() if k in new] + [
+        (*k, d) for k, d in new.items()
+    ]
+    both = spark.createDataFrame(
+        rows, ", ".join([*key_schema, f"digest {DIGEST_TYPE.simpleString()}"])
+    )
+    out = {k: d for k, d in stored.items() if k not in new}
+    out.update(_digest_table(tdigest_merge_agg(both, by=by), by))
+    return out
+
+
+@pytest.fixture(scope="module")
+def rolling_sink(spark, tmp_path_factory):
+    """Four two-file batches at delta=50 with a rolling set of touched
+    groups: g6 first appears in batch 3, and batch 3's rows for g1 are
+    all NULL. Returns (touched groups per batch, sink table per batch,
+    chain table per batch)."""
+    import pyarrow as pa
+
+    tmp = tmp_path_factory.mktemp("rolling_sink")
+    rng = np.random.default_rng(11)
+    touched = [
+        ["g0", "g1", "g2", "g3", "g4", "g5"],
+        ["g2", "g3", "g4", "g5"],
+        ["g1", "g4", "g5", "g6"],
+        ["g0", "g1", "g6"],
+    ]
+    batches = []
+    for i, groups in enumerate(touched):
+        files = []
+        for _ in range(2):
+            g = np.repeat(groups, rng.integers(50, 400, len(groups)))
+            v = rng.lognormal(0.0, 1.0, len(g))
+            vals = pa.array(
+                [None if (i == 2 and k == "g1") else x for k, x in zip(g, v)],
+                pa.float64(),
+            )
+            files.append(pa.table({"g": pa.array(g, pa.string()), "v": vals}))
+        batches.append(files)
+    sink = _sink_per_batch(spark, tmp, batches, "g string, v double", ["g"], 50)
+    chain, stored = [], None
+    for i, files in enumerate(batches):
+        paths = [str(tmp / "src" / f"b{i}-{j}.parquet") for j in range(len(files))]
+        batch_df = spark.read.parquet(*paths)
+        if stored is None:
+            stored = _digest_table(tdigest_agg(batch_df, "v", by=["g"], delta=50), ["g"])
+        else:
+            stored = _chain_step(spark, stored, batch_df, ["g"], ["g string"], 50)
+        chain.append(stored)
+    return touched, sink, chain
+
+
+def test_digest_sink_upsert_matches_merge_chain(rolling_sink):
+    """After every micro-batch the stored table equals the chain
+    ``tdigest_merge_agg(touched ∪ tdigest_agg(batch))``: identical
+    centroid counts and weights, means within 1e-12, and the groups a
+    batch does not touch byte-identical to the previous commit."""
+    touched, sink, chain = rolling_sink
+    for i, (got, want) in enumerate(zip(sink, chain)):
+        assert sorted(got) == sorted(want), i
+        for k, d in want.items():
+            g = got[k]
+            assert len(g["means"]) == len(d["means"]), (i, k)
+            assert g["weights"] == d["weights"], (i, k)
+            np.testing.assert_allclose(g["means"], d["means"], rtol=1e-12, atol=0)
+            for f in ("total_weight", "vmin", "vmax", "delta"):
+                assert g[f] == d[f], (i, k, f)
+        if i:
+            for k in set(sink[i - 1]) - {(g,) for g in touched[i]}:
+                assert got[k] == sink[i - 1][k], (i, k)
+    assert ("g6",) not in sink[1] and ("g6",) in sink[2]
+
+
+def test_digest_sink_all_null_batch_rows_keep_chain_result(rolling_sink):
+    """A group whose batch rows are all NULL is still touched: its
+    stored digest goes through the merge with the empty batch digest,
+    as in the chain, and keeps its weight."""
+    _, sink, chain = rolling_sink
+    before, after = sink[1][("g1",)], sink[2][("g1",)]
+    assert after["total_weight"] == before["total_weight"]
+    assert after["weights"] == chain[2][("g1",)]["weights"]
+    np.testing.assert_allclose(
+        after["means"], chain[2][("g1",)]["means"], rtol=1e-12, atol=0
+    )
+
+
+@pytest.mark.parametrize("key_type", ["string", "long"])
+def test_digest_sink_null_group_key_stays_one_row(spark, tmp_path, key_type):
+    """A NULL group key is one group across batches: one stored row,
+    carrying every NULL-keyed value (cf. the hypertable's null-safe
+    split)."""
+    import pyarrow as pa
+
+    keys = {"string": ["a", "b"], "long": [1, 2]}[key_type]
+    arrow_type = {"string": pa.string(), "long": pa.int64()}[key_type]
+    batches = [
+        [keys[0], None, keys[1], None],
+        [None, keys[0]],
+        [None],
+    ]
+    tables = [
+        [pa.table({"k": pa.array(ks, arrow_type), "v": np.arange(len(ks), dtype=float)})]
+        for ks in batches
+    ]
+    sink = _sink_per_batch(
+        spark, tmp_path, tables, f"k {key_type}, v double", ["k"], LOSSLESS
+    )
+    final = sink[-1]
+    assert sorted(final, key=str) == sorted([(keys[0],), (keys[1],), (None,)], key=str)
+    assert final[(None,)]["total_weight"] == 4.0
+    assert final[(keys[0],)]["total_weight"] == 2.0
+
+
+@pytest.mark.parametrize("delta", [50, LOSSLESS])
+def test_digest_sink_keyless(spark, tmp_path, delta):
+    """``by=[]``: the table is one row, equal after every batch to the
+    merge chain, and at lossless delta to the batch build over every
+    row streamed."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(4)
+    vals = [rng.lognormal(0.0, 1.0, n) for n in (3000, 500, 1200)]
+    tables = [[pa.table({"v": v})] for v in vals]
+    sink = _sink_per_batch(spark, tmp_path, tables, "v double", [], delta)
+    assert [len(t) for t in sink] == [1, 1, 1]
+    stored = None
+    for i in range(len(vals)):
+        batch_df = spark.read.parquet(str(tmp_path / "src" / f"b{i}-0.parquet"))
+        if stored is None:
+            stored = _digest_table(tdigest_agg(batch_df, "v", delta=delta), [])
+        else:
+            stored = _chain_step(spark, stored, batch_df, [], [], delta)
+        got, want = sink[i][()], stored[()]
+        assert got["weights"] == want["weights"], i
+        np.testing.assert_allclose(got["means"], want["means"], rtol=1e-12, atol=0)
+    if delta == LOSSLESS:
+        allv = spark.createDataFrame(
+            [(float(x),) for x in np.concatenate(vals)], "v double"
+        )
+        assert sink[-1][()] == _digest_table(tdigest_agg(allv, "v", delta=delta), [])[()]
 
 
 def test_sketch_sink_untouched_groups_pass_through(spark, tmp_path):

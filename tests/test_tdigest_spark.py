@@ -504,6 +504,54 @@ def test_weighted_sql_build_equals_pandas_lossless(spark):
     assert ra == rb and len(ra) == 2
 
 
+@pytest.mark.parametrize("delta", [20, 200])
+def test_k1_cluster_merge_matches_sql(spark, delta):
+    """The numpy k1 grouping (``k1_cluster_merge``, digest_sink's batch
+    merge) against the SQL merge it twins (``tdigest_merge_agg_sql``)
+    on seeded grouped partials: tied means, fractional weights, a
+    singleton group and an all-NULL group. Same centroid count and
+    weights, same vmin/vmax/total_weight, means within 1e-12 relative.
+    Weights are multiples of 1/4, so every sum is exact in both."""
+    from tdigest_spark.operators.digest_agg import DIGEST_TYPE, tdigest_merge_agg_sql
+    from tdigest_spark.sketch.tdigest import TDigest, k1_cluster_merge
+
+    rng = np.random.default_rng(delta)
+    parts: dict[str, list] = {}
+    for g in range(6):
+        for _ in range(int(rng.integers(1, 5))):
+            n = int(rng.integers(1, 3000))
+            if g % 2:  # heavy ties: integer values from a small range
+                v = rng.integers(0, 40, n).astype(np.float64)
+            else:
+                v = rng.lognormal(0.0, 1.0, n)
+            w = rng.integers(1, 9, n) / 4.0
+            d = TDigest.from_values(v, delta, weights=w).ship_compressed()
+            parts.setdefault(f"g{g}", []).append(d)
+    parts["single"] = [TDigest.from_values(np.array([2.5]), delta)]
+    parts["nulls"] = [TDigest.empty(delta), TDigest.empty(delta)]
+    parts["g0"].append(TDigest.empty(delta))  # an empty partial among full ones
+
+    def row(d):
+        r = d.to_row()
+        return {**r, "means": r["means"].tolist(), "weights": r["weights"].tolist()}
+
+    df = spark.createDataFrame(
+        [(g, row(d)) for g, ds in parts.items() for d in ds],
+        f"g string, digest {DIGEST_TYPE.simpleString()}",
+    ).repartition(3)
+    got = {r["g"]: r["digest"] for r in tdigest_merge_agg_sql(df, by=["g"], delta=delta).collect()}
+    assert sorted(got) == sorted(parts)
+    for g, ds in parts.items():
+        want = row(k1_cluster_merge(ds, delta))
+        sql = got[g]
+        assert len(sql["means"]) == len(want["means"]), g
+        assert list(sql["weights"]) == want["weights"], g
+        np.testing.assert_allclose(sql["means"], want["means"], rtol=1e-12, atol=0)
+        for f in ("total_weight", "vmin", "vmax", "delta"):
+            assert sql[f] == want[f], (g, f)
+    assert got["nulls"]["means"] == [] and got["nulls"]["vmin"] is None
+
+
 def test_keyless_sql_merge_two_level(spark, events):
     """Keyless tdigest_merge_agg_sql (the cube/rollup grand-total path)
     must pre-cluster within salt buckets so no single window task sorts
